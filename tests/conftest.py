@@ -48,7 +48,10 @@ def pytest_configure(config):
     )
 
 
+@pytest.hookimpl(trylast=True)
 def pytest_collection_modifyitems(config, items):
+    # trylast: run after _pytest.mark has applied -m/-k deselection,
+    # so a deselected tier queues no oracle prefetch
     for it in items:
         if "[" not in it.nodeid:
             continue
